@@ -43,6 +43,81 @@ from gofias_spark.config import AnalyzerConfig, BM25Params, IndexConfig
 from gofias_spark.index.iofs import resolve_io
 
 MANIFEST = "manifest.json"
+# row schemas of the delta tables (written by index/merge.py)
+TOMBSTONE_SCHEMA = "doc_id long, dl long"
+STATS_DELTA_SCHEMA = "term string, ddf long"
+
+
+def manifest_state(manifest: dict) -> tuple:
+    """What a reader's snapshot of the index is made of: the committed
+    segments and tombstone files, in commit order."""
+    return (
+        tuple(manifest.get("segments", [])),
+        tuple(manifest.get("tombstones", {}).get("files", [])),
+    )
+
+
+def data_files(table_dir: str | os.PathLike) -> list[Path]:
+    """A table directory's parquet data files, in name order: files under
+    ``key=value`` partition directories included, hidden (``.``/``_``)
+    entries skipped — the files Spark and pyarrow datasets read."""
+    def visible(p: Path) -> bool:
+        return not p.name.startswith((".", "_"))
+
+    root = Path(table_dir)
+    if not root.is_dir():
+        return []
+    out = []
+    for p in sorted(root.iterdir()):
+        if not visible(p):
+            continue
+        if p.is_dir():
+            out += [f for f in sorted(p.iterdir()) if f.is_file() and visible(f)]
+        elif p.is_file():
+            out.append(p)
+    return out
+
+
+def arrow_table_dataset(table_dir: str | os.PathLike):
+    """A segment table directory as a pyarrow dataset: its ``doc_part=K``
+    partition directories give a long ``doc_part`` column, as in
+    ``read_parquet``."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    return ds.dataset(
+        str(table_dir), format="parquet",
+        partitioning=ds.partitioning(
+            pa.schema([("doc_part", pa.int64())]), flavor="hive"
+        ),
+    )
+
+
+def read_parquet(spark, table_dir: str | os.PathLike):
+    """``spark.read.parquet(table_dir)`` without Spark's schema-inference
+    job. Without ``mergeSchema`` Spark reads the footer of one data file,
+    but in a job of its own (~0.2 s each, and an engine opens several
+    tables per segment); here the first data file's footer is read on the
+    driver with pyarrow instead. A ``doc_part=K`` partition directory adds
+    a long ``doc_part`` column, as every computed doc_part is long. A
+    table with no data file goes through Spark's own inference (and its
+    error for an empty path)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    files = data_files(table_dir)
+    if not files:
+        return spark.read.parquet(str(table_dir))
+    fields = [
+        T.StructField(f.name, f.dataType, True)
+        for f in from_arrow_schema(pq.read_schema(files[0])).fields
+    ]
+    if files[0].parent.name.startswith("doc_part=") and "doc_part" not in {
+        f.name for f in fields
+    }:
+        fields.append(T.StructField("doc_part", T.LongType(), True))
+    return spark.read.schema(T.StructType(fields)).parquet(str(table_dir))
 
 
 @dataclass

@@ -44,7 +44,15 @@ from pyspark.sql import types as T
 
 from gofias_spark.analyzer import analyze_query, tokenize_text
 from gofias_spark.config import AnalyzerConfig, BM25Params
-from gofias_spark.index.store import IndexStore
+from gofias_spark.index.store import (
+    STATS_DELTA_SCHEMA,
+    TOMBSTONE_SCHEMA,
+    IndexStore,
+    arrow_table_dataset,
+    data_files,
+    manifest_state,
+    read_parquet,
+)
 from gofias_spark.query import kernel as K
 from gofias_spark.query.memgov import GOVERNOR
 from gofias_spark.query.serve import ServeCache, state_token
@@ -75,6 +83,18 @@ def _by_score(r: pd.DataFrame) -> pd.DataFrame:
     """Rows in the engine's result order: score desc, doc_id asc."""
     return r.sort_values(["score", "doc_id"], ascending=[False, True],
                          kind="mergesort")
+
+
+def _term_sums(files, col: str):
+    """(term, Σ col) pairs over the parquet ``files``, read with pyarrow."""
+    import pyarrow.dataset as ds
+
+    if not files:
+        return []
+    tbl = ds.dataset([str(f) for f in files], format="parquet").to_table(
+        columns=["term", col]
+    ).group_by("term").aggregate([(col, "sum")])
+    return zip(tbl["term"].to_pylist(), tbl[f"{col}_sum"].to_pylist())
 
 
 def _weighted_quantiles(vals: np.ndarray, cnts: np.ndarray, ps) -> list:
@@ -575,8 +595,16 @@ class SearchEngine:
         serve: bool = True,
         serve_max_postings: int = 1_000_000,
         serve_filtered_max: int = 500_000,
+        predecessor: SearchEngine | None = None,
     ):
-        """``serve``/``serve_max_postings``: the term-bucketed serve cache
+        """``predecessor``: an open, warmed engine on an earlier state of
+        the same index (``FulltextAPI._reopen`` passes the engine it
+        replaces). When this state only adds segments and tombstone files
+        to the predecessor's, ``warm()`` extends the predecessor's
+        resident source and stats dict with just what was added instead
+        of recollecting the index; any other state warms in full.
+
+        ``serve``/``serve_max_postings``: the term-bucketed serve cache
         (query/serve.py) handles unfiltered queries whose total posting
         volume Σ df(term) fits the driver budget — a partition-pruned scan
         of 1-3 tasks + driver-side kernel, so p50 is independent of index
@@ -606,7 +634,6 @@ class SearchEngine:
         self._serve_enabled = serve
         self._serve_max = serve_max_postings
         self._serve_filtered_max = serve_filtered_max
-        self._tomb_arr: np.ndarray | None = None
         self.manifest = self.store.read_manifest()
         cfg = self.manifest["config"]
         self.analyzer = AnalyzerConfig(**cfg["analyzer"])
@@ -619,6 +646,11 @@ class SearchEngine:
         # driver-resident snapshot of a small index (warm()); queries read
         # this reference once, eviction/close() only drop it
         self._resident: ResidentSource | None = None
+        # read by warm() only, then dropped (no chain of old engines)
+        self._predecessor = predecessor
+        self._delta_files = frozenset(
+            p.name for p in data_files(self.store.root / "stats_delta")
+        )
         tomb = self.manifest.get("tombstones", {"n_docs": 0, "sum_dl": 0})
         self.n_docs = sum(m.n_docs for m in self._seg_metas.values()) - tomb[
             "n_docs"
@@ -631,7 +663,15 @@ class SearchEngine:
         self.postings = self._union("postings", seg_col=True)
         self.doc_meta = self._union("doc_meta")
         self._tombstones = self._read_tombstones()
-        self._stats = self._build_stats()
+        self._tomb_arr = self._read_tomb_ids()
+        # the stats_delta files of this state, read now; the live-df frame
+        # over them is built on first use (``_stats``)
+        self._delta_read = None if not self._delta_files else (
+            self.spark.read.schema(STATS_DELTA_SCHEMA)
+            .parquet(str(self.store.root / "stats_delta"))
+        )
+        self._stats_df: DataFrame | None = None
+        self._cache = cache
         self._stats_cache: dict[str, int] | None = None
         self._fuzzy_map: dict[str, list[str]] | None = None
         self._fuzzy_map_token: str | None = None
@@ -681,7 +721,6 @@ class SearchEngine:
                 .sortWithinPartitions("term", "doc_part", "block_id")
                 .persist()
             )
-            self._stats = self._stats.persist()
             # doc_id-sorted: the top-k meta lookup filters doc_id IN (k ids),
             # which prunes cached batches on min/max doc_id stats
             self._meta_slim = (
@@ -694,16 +733,8 @@ class SearchEngine:
         # of a 1-call-per-doc_part cogroup; big tombstone sets (or attribute
         # filters) keep the shuffle-free cogroup-by-doc_part path.
         self._tomb_bc = None
-        if self._tombstones is not None:
-            n_tomb = self._tombstones.count()
-            if n_tomb <= 5_000_000:
-                arr = np.sort(
-                    self._tombstones.select("doc_id")
-                    .toPandas()["doc_id"]
-                    .to_numpy(dtype=np.int64)
-                )
-                self._tomb_arr = arr
-                self._tomb_bc = spark.sparkContext.broadcast(arr)
+        if self._tomb_arr is not None:
+            self._tomb_bc = spark.sparkContext.broadcast(self._tomb_arr)
 
     # -- loading ------------------------------------------------------------
     def _union(self, table: str, seg_col: bool = False) -> DataFrame:
@@ -713,15 +744,7 @@ class SearchEngine:
         pre- and post-change segments still opens."""
         dfs = []
         for s in self._seg_ids:
-            df = self.spark.read.parquet(str(self.store.seg_dir(s) / table))
-            if "doc_part" in df.columns:
-                # partition-dir columns are inferred as INT; every computed
-                # doc_part (e.g. shiftright(doc_id)) is LONG. Normalize here:
-                # hash(int x) != hash(long x) in Spark, so a cached
-                # HashPartitioning on the int column would NOT co-partition
-                # with the long side in cogroups (tombstones silently
-                # unpaired — caught by test_incremental).
-                df = df.withColumn("doc_part", F.col("doc_part").cast("long"))
+            df = self._seg_read(s, table)
             if seg_col:
                 df = df.withColumn("seg", F.lit(s))
             dfs.append(df)
@@ -729,6 +752,19 @@ class SearchEngine:
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
         return out
+
+    def _seg_read(self, seg: int, table: str) -> DataFrame:
+        """One segment's ``table`` as a Spark frame."""
+        df = read_parquet(self.spark, self.store.seg_dir(seg) / table)
+        if "doc_part" in df.columns:
+            # partition-dir columns are inferred as INT; every computed
+            # doc_part (e.g. shiftright(doc_id)) is LONG. Normalize here:
+            # hash(int x) != hash(long x) in Spark, so a cached
+            # HashPartitioning on the int column would NOT co-partition
+            # with the long side in cogroups (tombstones silently
+            # unpaired — caught by test_incremental).
+            df = df.withColumn("doc_part", F.col("doc_part").cast("long"))
+        return df
 
     def _load_positions(self) -> DataFrame | None:
         """Positional-sidecar union across live segments, or None when the
@@ -757,10 +793,7 @@ class SearchEngine:
         for s in self._seg_ids:
             pos_dir = self.store.seg_dir(s) / "positions"
             if pos_dir.exists() and any(pos_dir.glob("doc_part=*/*.parquet")):
-                df = self.spark.read.parquet(str(pos_dir))
-                dfs.append(
-                    df.withColumn("doc_part", F.col("doc_part").cast("long"))
-                )
+                dfs.append(self._seg_read(s, "positions"))
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
@@ -770,7 +803,40 @@ class SearchEngine:
         files = self.manifest.get("tombstones", {}).get("files", [])
         if not files:
             return None
-        return self.spark.read.parquet(*[str(self.store.root / f) for f in files])
+        return self.spark.read.schema(TOMBSTONE_SCHEMA).parquet(
+            *[str(self.store.root / f) for f in files]
+        )
+
+    def _read_tomb_ids(self) -> np.ndarray | None:
+        """Sorted tombstoned doc_ids, read on the driver with pyarrow —
+        None without tombstones or above 5M of them (those stay
+        Spark-side only)."""
+        import pyarrow.dataset as ds
+
+        files = self.manifest.get("tombstones", {}).get("files", [])
+        if not files:
+            return None
+        dset = ds.dataset(
+            [str(p) for f in files for p in data_files(self.store.root / f)],
+            format="parquet",
+        )
+        if dset.count_rows() > 5_000_000:
+            return None
+        ids = dset.to_table(columns=["doc_id"])["doc_id"].to_numpy()
+        return np.sort(ids.astype(np.int64))
+
+    @property
+    def _stats(self) -> DataFrame:
+        """Live per-term document frequency as a Spark frame (persisted
+        with ``cache``), built on first use: a warmed engine looks dfs up
+        in its stats dict and may never need it."""
+        stats = self._stats_df
+        if stats is None:
+            stats = self._build_stats()
+            if self._cache:
+                stats = stats.persist()
+            self._stats_df = stats
+        return stats
 
     def _build_stats(self) -> DataFrame:
         """Live per-term document frequency: per-segment df summed, minus
@@ -778,10 +844,9 @@ class SearchEngine:
         stats = self._union("term_stats").groupBy("term").agg(
             F.sum("df").alias("df")
         )
-        delta_dir = self.store.root / "stats_delta"
-        if delta_dir.exists() and any(delta_dir.iterdir()):
+        if self._delta_read is not None:
             ddf = (
-                self.spark.read.parquet(str(delta_dir))
+                self._delta_read
                 .groupBy("term")
                 .agg(F.sum("ddf").alias("ddf"))
             )
@@ -819,7 +884,43 @@ class SearchEngine:
         gives the same results; each query reads the engine's source
         reference once, so a cache-governor eviction or ``close()``
         during a query cannot change what that query reads. Pass
-        ``local_max_blocks=0`` to skip the resident source."""
+        ``local_max_blocks=0`` to skip the resident source.
+
+        An engine opened with a ``predecessor`` whose state this one only
+        extends (every segment and tombstone file kept, same config; only
+        segments, tombstone files and stats-delta files added) warms
+        incrementally: the predecessor's resident source and stats dict
+        are extended with just the added files, read on the driver with
+        pyarrow — no Spark job, and the Spark-side caches, which the
+        resident tier never reads, stay lazy. Its cost is that of the
+        change, not of the index. The trade-off: should the resident
+        source later be dropped (a governor eviction in a gateway hosting
+        several indexes) or an operator without a driver branch run, the
+        first Spark query after that bulk materializes the postings and
+        meta caches itself (repartition, sort and cache of every posting,
+        seconds on a 100k-block index) where a full warm had done it up
+        front. Any other state (a compaction, a config change, no
+        resident predecessor, a result over either budget) takes the full
+        warm."""
+        pred, self._predecessor = self._predecessor, None
+        if pred is None or not self._warm_from(pred, max_terms,
+                                               local_max_blocks):
+            self._warm_full(max_terms, local_max_blocks)
+        # process-level BYTE governance across engines (a gateway can
+        # host several warmed indexes): register what this warm actually
+        # holds; over-budget admission drops our caches (cold routing
+        # still serves correctly), under-budget admission evicts LRU
+        # peers instead
+        self._fuzzy_map_refused_token = None  # budget may have changed
+        nbytes = self._resident_cache_bytes()
+        if nbytes and not GOVERNOR.admit(
+            self._gov_key, nbytes, self._drop_resident_caches
+        ):
+            self._drop_resident_caches()
+
+    def _warm_full(self, max_terms: int, local_max_blocks: int) -> None:
+        """Materialize the Spark-side caches and collect the stats dict and
+        (for a small index) the resident source from them."""
         n_blocks = self.postings.count()
         self._meta_slim.count()
         if self._stats.count() <= max_terms:
@@ -850,18 +951,93 @@ class SearchEngine:
                 # driver-side (the same one-pass kernel, no Spark job)
                 None if self._positions is None
                 else self._positions.toPandas(),
+                state=manifest_state(self.manifest),
             )
-        # process-level BYTE governance across engines (a gateway can
-        # host several warmed indexes): register what this warm actually
-        # holds; over-budget admission drops our caches (cold routing
-        # still serves correctly), under-budget admission evicts LRU
-        # peers instead
-        self._fuzzy_map_refused_token = None  # budget may have changed
-        nbytes = self._resident_cache_bytes()
-        if nbytes and not GOVERNOR.admit(
-            self._gov_key, nbytes, self._drop_resident_caches
+
+    def _warm_from(self, pred: SearchEngine, max_terms: int,
+                   local_max_blocks: int) -> bool:
+        """Warm by extending ``pred``'s resident source and stats dict with
+        what this state added (see ``warm``). Returns False, having changed
+        nothing, when this state is not an extension of ``pred``'s or the
+        result exceeds a budget."""
+        res, sc = pred._resident, pred._stats_cache
+        if res is None or sc is None:
+            return False
+        old_segs, old_tombs = manifest_state(pred.manifest)
+        segs, tombs = manifest_state(self.manifest)
+        if (
+            res.state != (old_segs, old_tombs)
+            or pred.manifest["config"] != self.manifest["config"]
+            or tombs[: len(old_tombs)] != old_tombs
+            or not set(old_segs) <= set(segs)
+            or any(pred._seg_metas[s] != self._seg_metas[s]
+                   for s in old_segs)
+            or not pred._delta_files <= self._delta_files
+            or (pred._positions is None) != (self._positions is None)
+            or (self._tombstones is not None and self._tomb_arr is None)
         ):
-            self._drop_resident_caches()
+            return False
+        new_segs = [s for s in segs if s not in old_segs]
+        added = {
+            table: None if like is None
+            else self._added_rows(new_segs, table, like)
+            for table, like in (("postings", res.blocks),
+                                ("doc_meta", res.meta),
+                                ("positions", res.positions))
+        }
+        n_added = 0 if added["postings"] is None else len(added["postings"])
+        if not 0 < len(res.blocks) + n_added <= local_max_blocks:
+            return False
+        # live df = Σ segment df − Σ ddf, terms at df <= 0 dropped: the
+        # predecessor's dict plus the new segments' dfs minus the new ddfs
+        stats = dict(sc)
+        for s in new_segs:
+            for t, df in _term_sums(
+                data_files(self.store.seg_dir(s) / "term_stats"), "df"
+            ):
+                stats[t] = stats.get(t, 0) + df
+        delta_dir = self.store.root / "stats_delta"
+        for t, ddf in _term_sums(
+            [delta_dir / f
+             for f in sorted(self._delta_files - pred._delta_files)],
+            "ddf",
+        ):
+            df = stats.get(t, 0) - ddf
+            if df > 0:
+                stats[t] = df
+            else:
+                stats.pop(t, None)
+        if len(stats) > max_terms:
+            return False
+        self._stats_cache = stats
+        self._resident = res.extend(
+            added["postings"], added["doc_meta"], added["positions"],
+            self._tomb_arr, (segs, tombs),
+        )
+        return True
+
+    def _added_rows(self, segs: list[int], table: str, like: pd.DataFrame
+                    ) -> pd.DataFrame | None:
+        """The rows of ``table`` in the segments ``segs``, read with
+        pyarrow as the rows ``toPandas()`` of the engine's Spark union
+        gives for them: the columns and dtypes of ``like`` (``seg`` filled
+        in, ``doc_part`` long). None when there are none."""
+        parts = []
+        for seg in segs:
+            table_dir = self.store.seg_dir(seg) / table
+            if not data_files(table_dir):
+                continue
+            dset = arrow_table_dataset(table_dir)
+            cols = [c for c in like.columns if c in dset.schema.names]
+            pdf = dset.to_table(columns=cols).to_pandas()
+            if "seg" in like.columns:
+                pdf["seg"] = seg
+            parts.append(pdf[list(like.columns)])
+        if not parts:
+            return None
+        return pd.concat(parts, ignore_index=True).astype(
+            like.dtypes.to_dict()
+        )
 
     @property
     def _local_blocks(self) -> pd.DataFrame | None:
@@ -4663,9 +4839,17 @@ class SearchEngine:
             if len(hits) == 0:
                 return empty
             hits = hits.groupby("term", as_index=False)["hits"].sum()
-            bg = self._stats.filter(
-                F.col("term").isin(hits["term"].tolist())
-            ).toPandas()
+            sc = self._stats_cache
+            if sc is None:
+                bg = self._stats.filter(
+                    F.col("term").isin(hits["term"].tolist())
+                ).toPandas()
+            else:
+                terms = [t for t in hits["term"] if t in sc]
+                bg = pd.DataFrame({
+                    "term": pd.Series(terms, dtype=object),
+                    "df": pd.Series([sc[t] for t in terms], dtype="int64"),
+                })
             return _finish(hits, bg)
 
         # distributed: full-postings pass per doc_part (this is a corpus
@@ -5141,16 +5325,29 @@ class SearchEngine:
             "analyzer": self.manifest["config"]["analyzer"],
         }
 
-    def close(self) -> None:
+    def close(self, keep: SearchEngine | None = None) -> None:
         """Release executor-side state: unpersist the cached postings /
         stats / meta frames and drop the tombstone broadcast. A serving
         process that reopens engines across delta imports must close the
         old one, or each reopen leaks a full postings cache into executor
         storage memory (the serve cache's parquet files persist on disk by
-        design — they are keyed by index state and reused)."""
-        for df in (self.postings, self._stats, self._meta_slim):
+        design — they are keyed by index state and reused).
+
+        ``keep``: an engine that stays open (the other side of a reopen).
+        Spark's CacheManager keys cached data by plan, so a frame whose
+        plan equals one of ``keep``'s — the postings and meta of a
+        delete-only delta, whose segment set is unchanged — shares its
+        cache entry; that entry is left cached for ``keep``."""
+        held = () if keep is None else (
+            keep.postings, keep._stats_df, keep._meta_slim
+        )
+        held = [h for h in held if h is not None]
+        for df in (self.postings, self._stats_df, self._meta_slim):
+            if df is None:
+                continue
             try:
-                df.unpersist()
+                if not any(df.sameSemantics(h) for h in held):
+                    df.unpersist()
             except Exception:  # noqa: BLE001 - already-stopped session
                 pass
         if self._tomb_bc is not None:

@@ -106,13 +106,44 @@ class ResidentSource:
 
     def __init__(self, blocks: pd.DataFrame, meta: pd.DataFrame,
                  tombs: np.ndarray | None,
-                 positions: pd.DataFrame | None = None):
+                 positions: pd.DataFrame | None = None,
+                 state: tuple | None = None):
+        """``state``: the index state the snapshot holds
+        (``store.manifest_state``: segments and tombstone files), or None
+        when unknown. A bulk resolves its keys against the snapshot only
+        when this equals the state on disk."""
         self.blocks, self.positions = blocks, positions
+        self.state = state
         self._block_index = _term_index(blocks)
         self._pos_index = _term_index(positions)
         self.meta = meta.sort_values("doc_id", ignore_index=True)
         self._ids = self.meta["doc_id"].to_numpy(dtype=np.int64)
         self.tombs = tombs
+        # pandas deep bytes of the frames: measuring them walks every
+        # object (~0.1 s on 100k blocks), so extend() adds the measure of
+        # just the added rows to this one's
+        self._frame_bytes: int | None = None
+
+    def extend(self, blocks: pd.DataFrame | None, meta: pd.DataFrame | None,
+               positions: pd.DataFrame | None, tombs: np.ndarray | None,
+               state: tuple | None) -> ResidentSource:
+        """A new source holding this one's rows plus the added ``blocks``,
+        ``meta`` and ``positions`` rows (same columns; None adds none),
+        with ``tombs`` and ``state`` in place of this one's. This source
+        is left as it is; only the added frames are measured."""
+        def cat(old, new):
+            if old is None or new is None or not len(new):
+                return old
+            # copy() consolidates the per-column blocks that concat leaves
+            # (one 2D block per dtype): a row take per query on 13 blocks
+            # measured ~2 ms slower than on the 3 of a full warm's frame
+            return pd.concat([old, new], ignore_index=True).copy()
+
+        out = ResidentSource(cat(self.blocks, blocks), cat(self.meta, meta),
+                             tombs, cat(self.positions, positions), state)
+        out._frame_bytes = self._deep_bytes() + _deep_bytes(
+            blocks, meta, None if self.positions is None else positions)
+        return out
 
     @property
     def has_positions(self) -> bool:
@@ -155,11 +186,21 @@ class ResidentSource:
     def nbytes(self) -> int:
         """Measured bytes held: pandas deep memory + numpy nbytes (what
         the CacheGovernor accounts)."""
-        total = sum(
-            int(pdf.memory_usage(deep=True).sum())
-            for pdf in (self.blocks, self.meta, self.positions)
-            if pdf is not None
-        )
         arrays = [self.tombs, *(self._block_index or ()),
                   *(self._pos_index or ())]
-        return total + sum(int(a.nbytes) for a in arrays if a is not None)
+        return self._deep_bytes() + sum(
+            int(a.nbytes) for a in arrays if a is not None)
+
+    def _deep_bytes(self) -> int:
+        if self._frame_bytes is None:
+            self._frame_bytes = _deep_bytes(
+                self.blocks, self.meta, self.positions)
+        return self._frame_bytes
+
+
+def _deep_bytes(*frames: pd.DataFrame | None) -> int:
+    """pandas deep memory of the frames' columns (objects' own sizes
+    included; the row index left out, so the bytes of concatenated
+    frames are the sum of theirs)."""
+    return sum(int(pdf.memory_usage(deep=True, index=False).sum())
+               for pdf in frames if pdf is not None)

@@ -67,7 +67,10 @@ def get_spark(
         # local mode: executors live in the driver JVM — size it to the box
         # (spilling the build's one content shuffle to disk is what kills
         # scaling; see scripts/run_scaling.py)
-        .config("spark.driver.memory", os.environ.get("GOFIAS_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("GOFIAS_DRIVER_MEM") or default_driver_memory(),
+        )
         # ParallelGC: measured 6-15x faster than default G1 on this engine's
         # string-churn stages (regex tokenize, sha2, Arrow encode) AND it
         # scales with threads where G1 anti-scales (local[8] 30s -> local[32]
@@ -93,6 +96,23 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
     return spark
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when ``GOFIAS_DRIVER_MEM`` is unset: half
+    the host's ``MemTotal``, at least 1g and at most 48g. A fixed 48g let
+    the heap of a long local session (the test suite) outgrow a 15 GB
+    host. Without a readable ``meminfo``: 48g."""
+    cap_gb = 48
+    try:
+        with open(meminfo) as f:
+            kb = next(
+                int(line.split()[1]) for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{cap_gb}g"
+    return f"{min(cap_gb, max(1, kb // (2 * 1024 * 1024)))}g"
 
 
 def _ship_package(spark: SparkSession) -> None:

@@ -21,12 +21,21 @@ QUERIES = json.loads((Path(__file__).parent / "queries.json").read_text())
 REF_QUERIES = [q for q in QUERIES if q.get("corpus") != "synthetic"]
 
 
+def _refcorpus(spark):
+    """The reference corpus rows; the module's tests skip when the
+    reference checkout is absent (it then loads no file)."""
+    docs = load_refcorpus(spark)
+    if docs.isEmpty():
+        pytest.skip("reference checkout (FIXTURES.md §2) absent")
+    return docs
+
+
 @pytest.fixture(scope="module")
 def ref_index(spark, tmp_path_factory):
     """refcorpus built with small partitions (several doc_parts + small
     blocks so multi-block/multi-partition paths are exercised)."""
     root = str(tmp_path_factory.mktemp("refidx"))
-    docs = load_refcorpus(spark)
+    docs = _refcorpus(spark)
     cfg = IndexConfig(n_buckets=5, block_size=8)
     build_segment(spark, docs, root, cfg)
     return root, cfg
@@ -35,7 +44,7 @@ def ref_index(spark, tmp_path_factory):
 @pytest.fixture(scope="module")
 def ref_prefix_index(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("refidx_prefix"))
-    docs = load_refcorpus(spark)
+    docs = _refcorpus(spark)
     cfg = IndexConfig(
         n_buckets=5,
         block_size=8,
